@@ -3,8 +3,8 @@
 ``approx_distinct(df, 'url', ['lang', 'day'])`` ≙ the reference-mandated
 "distinct URLs per (lang, day)" plan (SURVEY.md §2.9.1):
 column-pruned scan → JVM xxhash64 → mapInArrow partial HLLs →
-shuffle-by-key of register states → applyInPandas register-max merge →
-estimate column.
+shuffle-by-key of register states → Arrow group-fold register-max merge
+(``sketch_agg.fold_groups``) → estimate column.
 """
 
 from __future__ import annotations

@@ -48,6 +48,7 @@ from pyspark.sql.types import (
 )
 
 from probabilistic_rs_spark.errors import SketchConfigError
+from probabilistic_rs_spark.operators.sketch_agg import fold_groups, key_runs
 from probabilistic_rs_spark.sketches.cms import CountMinSketch
 
 _PARTIAL_SCHEMA = StructType(
@@ -577,9 +578,9 @@ def build_cms_blocks_df(
     # in a mapInArrow stage over the aggregated (hash, count) rows —
     # identical KM arithmetic in uint64 — and each (partition, row,
     # block) emits ONE row with packed int32 offsets + int64 counts
-    # (12 B/cell, no row overhead). The scatter sums them per block with
-    # one np.add.at. Cell sums are order-free, so the blocks table is
-    # bit-identical to the explode formulation's.
+    # (12 B/cell, no row overhead). The scatter, a fold_groups merge,
+    # sums them per block with one np.add.at. Cell sums are order-free,
+    # so the blocks table is bit-identical to the explode formulation's.
     mid_schema = StructType(
         [
             StructField("row", IntegerType(), False),
@@ -610,8 +611,7 @@ def build_cms_blocks_df(
                 cells = (h1 + np.uint64(j) * h2) & mask
                 blocks = cells // cpb_
                 offs = (cells - blocks * cpb_).astype(np.int32)
-                for b in np.unique(blocks):
-                    sel = blocks == b
+                for b, sel in key_runs(blocks):
                     acc.setdefault((j, int(b)), []).append((offs[sel], c[sel]))
         if not acc:
             return
@@ -637,30 +637,24 @@ def build_cms_blocks_df(
         )
 
     mid = counts.mapInArrow(derive, mid_schema)
-    schema = (
-        "row int, block int, cells array<bigint>, d int, w bigint, "
-        "cells_per_block int"
+    schema = StructType(
+        [
+            StructField("cells", ArrayType(LongType()), False),
+            StructField("d", IntegerType(), False),
+            StructField("w", LongType(), False),
+            StructField("cells_per_block", IntegerType(), False),
+        ]
     )
 
-    def scatter(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        row, block = int(key[0]), int(key[1])
-        blen = min(cpb, w - block * cpb)
-        cells = np.zeros(blen, dtype=np.int64)
-        offs = np.frombuffer(b"".join(pdf["offs"]), dtype=np.int32)
-        cnts = np.frombuffer(b"".join(pdf["cnts"]), dtype=np.int64)
-        np.add.at(cells, offs.astype(np.int64), cnts)
-        return pd.DataFrame(
-            {
-                "row": pd.Series([row], dtype="int32"),
-                "block": pd.Series([block], dtype="int32"),
-                "cells": [cells.tolist()],
-                "d": pd.Series([d], dtype="int32"),
-                "w": pd.Series([w], dtype="int64"),
-                "cells_per_block": pd.Series([cpb], dtype="int32"),
-            }
-        )
+    def add_cells(key: tuple, vals: dict) -> tuple:
+        block = key[1]
+        cells = np.zeros(min(cpb, w - block * cpb), dtype=np.int64)
+        offs = np.frombuffer(b"".join(vals["offs"].to_pylist()), dtype=np.int32)
+        cnts = np.frombuffer(b"".join(vals["cnts"].to_pylist()), dtype=np.int64)
+        np.add.at(cells, offs, cnts)
+        return cells, d, w, cpb
 
-    return mid.groupBy("row", "block").applyInPandas(scatter, schema)
+    return fold_groups(mid, ["row", "block"], ["offs", "cnts"], add_cells, schema)
 
 
 def _cms_blocks_meta(blocks_df: DataFrame) -> tuple[int, int, int] | None:

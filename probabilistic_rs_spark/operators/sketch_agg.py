@@ -5,8 +5,8 @@ This is the Spark restatement of the reference's whole execution model
 lock — ``src/bloom/filter.rs:395-438``) becomes a ``mapInArrow`` kernel
 that absorbs a whole Arrow batch per Python call; the merge step the
 reference never ships (bitwise OR / register max / counter add /
-compactor merge) becomes an ``applyInPandas`` group-merge after a single
-shuffle of tiny binary states.
+compactor merge) becomes one Arrow fold per batch of groups
+(:func:`fold_groups`) after a single shuffle of tiny binary states.
 
 Plan shape (the only network boundary is the one partial-state shuffle):
 
@@ -15,13 +15,17 @@ Plan shape (the only network boundary is the one partial-state shuffle):
       → mapInArrow partial-build                 (1 row per key per partition)
       → exchange on group key                    (bytes ≪ input data)
       → [optional pre-merge by pid % fanin]      (tree reduce for huge fan-in)
-      → applyInPandas merge                      (1 row per key)
+      → [JVM] collect_list per key, then
+        mapInArrow fold                          (1 row per key)
 
 Scale notes (100 TB / 1000 executors):
 * Shuffled volume is ``n_keys_per_partition × state_bytes`` — independent
   of row count. A 16 KB HLL over 100k input partitions shuffles ~1.6 GB
   total; with ``tree_fanin`` the final reducer sees ``fanin`` rows max.
 * Partial build is map-side combine: one output row per (partition, key).
+* Grouping follows Spark's key semantics in both stages: null is a key
+  of its own, every NaN is one key, -0.0 equals 0.0, and struct keys
+  compare field by field (array and map keys are rejected up front).
 * Merge order inside a group is sorted by partition id, so results are
   bit-identical across runs, shuffle orders, and parallelism levels for
   Bloom/HLL/CMS (and deterministic for t-digest/KLL too at a fixed input
@@ -38,9 +42,11 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
+    ArrayType,
     BinaryType,
     IntegerType,
     LongType,
+    MapType,
     StructField,
     StructType,
 )
@@ -281,6 +287,78 @@ def _prepare_value(spec: SketchSpec, batch, colname: str):
     return pad_batch_arrow(arr, scratch_key=f"sketch:{colname}")
 
 
+def _grouping_leaves(arr) -> list:
+    """The atomic leaves of one grouping column, rewritten so that plain
+    value equality is Spark's key equality: a struct contributes its own
+    validity and then its fields (with the struct's nulls applied), and a
+    float becomes its bit pattern after -0.0 → 0.0 and every NaN → one
+    NaN, nulls kept."""
+    import pyarrow as pa
+
+    if pa.types.is_struct(arr.type):
+        leaves = [arr.is_valid()]
+        for child in arr.flatten():
+            leaves += _grouping_leaves(child)
+        return leaves
+    if pa.types.is_floating(arr.type):
+        v = arr.cast(pa.float64()).fill_null(0.0).to_numpy(zero_copy_only=False)
+        v = v + 0.0  # -0.0 → 0.0
+        v[np.isnan(v)] = np.nan
+        nulls = arr.is_null().to_numpy(zero_copy_only=False)
+        return [pa.array(v.view(np.int64), mask=nulls)]
+    return [arr]
+
+
+def key_runs(keys: np.ndarray) -> list[tuple]:
+    """``(key, rows)`` for each distinct value of an integer key array, in
+    ascending key order: one stable sort, then one slice per key (rows
+    ascending within a key) — never a scan of all rows per key."""
+    if len(keys) == 0:
+        return []
+    order = np.argsort(keys, kind="stable")
+    k = keys[order]
+    bounds = np.r_[0, np.flatnonzero(k[1:] != k[:-1]) + 1, len(k)]
+    return [(k[s], order[s:e]) for s, e in zip(bounds[:-1], bounds[1:])]
+
+
+def batch_groups(batch, cols: list[str]) -> list[tuple]:
+    """The rows of one non-empty Arrow batch grouped by ``cols`` with
+    Spark's key semantics: ``(key, rows)`` per group, where ``key`` is a
+    hashable tuple that is equal across batches exactly when Spark groups
+    the rows together, and ``rows`` are ascending row indices. With no
+    ``cols``, every row is in one group."""
+    import pyarrow.compute as pc
+
+    leaves = [leaf for c in cols for leaf in _grouping_leaves(batch.column(c))]
+    code = np.zeros(batch.num_rows, dtype=np.int64)
+    for leaf in leaves:
+        ids = pc.dictionary_encode(leaf, null_encoding="encode").indices
+        ids = ids.to_numpy(zero_copy_only=False).astype(np.int64)
+        code = np.unique(code * (int(ids.max()) + 1) + ids, return_inverse=True)[1]
+    runs = key_runs(code)
+    first = [rows[0] for _, rows in runs]
+    keys = zip(*(leaf.take(first).to_pylist() for leaf in leaves)) if leaves else [()]
+    return [(key, rows) for key, (_, rows) in zip(keys, runs)]
+
+
+def _check_group_types(schema: StructType, cols: list[str]) -> None:
+    """Array and map keys (also inside a struct) have no Arrow hash
+    grouping: refuse them on the driver, before any job launches."""
+
+    def nested(t) -> bool:
+        if isinstance(t, StructType):
+            return any(nested(f.dataType) for f in t.fields)
+        return isinstance(t, (ArrayType, MapType))
+
+    for c in cols:
+        if nested(schema[c].dataType):
+            raise SketchConfigError(
+                f"group column {c!r} has type {schema[c].dataType.simpleString()}; "
+                "array and map keys are not supported — group by atomic or "
+                "struct columns"
+            )
+
+
 def sketch_partials(
     df: DataFrame, group_cols: list[str], specs: list[SketchSpec]
 ) -> DataFrame:
@@ -296,6 +374,7 @@ def sketch_partials(
     projected = df.select(*proj)
 
     in_schema = projected.schema
+    _check_group_types(in_schema, group_cols)
     out_fields = [in_schema[g] for g in group_cols]
     out_fields.append(StructField("__pid", IntegerType(), False))
     out_fields += [StructField(s.state_col, BinaryType(), False) for s in specs]
@@ -306,45 +385,40 @@ def sketch_partials(
     group_local = list(group_cols)
 
     def build(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pandas as pd
         import pyarrow as pa
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else 0
         acc: dict[tuple, list] = {}
         counts: dict[tuple, int] = {}
+        key_values: dict[tuple, list] = {}  # one-row key arrays per group
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
             prepared = [
                 _prepare_value(s, batch, f"__v_{s.name}") for s in specs_local
             ]
-            if group_local:
-                gframe = pa.Table.from_batches([batch]).select(group_local).to_pandas()
-                groups = gframe.groupby(group_local, sort=False, dropna=False).indices
-                items = [
-                    (k if isinstance(k, tuple) else (k,), np.asarray(v))
-                    for k, v in groups.items()
-                ]
-            else:
-                items = [((), np.arange(n))]
-            for key, rows in items:
+            for key, rows in batch_groups(batch, group_local):
                 sketches = acc.get(key)
                 if sketches is None:
                     sketches = [s.make_builder() for s in specs_local]
                     acc[key] = sketches
                     counts[key] = 0
+                    key_values[key] = [
+                        batch.column(g).take([rows[0]]) for g in group_local
+                    ]
                 counts[key] += len(rows)
                 for spec, sk, prep in zip(specs_local, sketches, prepared):
                     _update_sketch(spec, sk, prep, rows)
         if not acc:
             return
         keys = list(acc.keys())
-        arrays = []
-        for i, g in enumerate(group_local):
-            vals = [k[i] for k in keys]
-            arrays.append(pa.array(vals, type=arrow_schema.field(i).type))
+        arrays = [
+            pa.concat_arrays([key_values[k][i] for k in keys]).cast(
+                arrow_schema.field(i).type
+            )
+            for i in range(len(group_local))
+        ]
         arrays.append(pa.array([pid] * len(keys), type=pa.int32()))
         for j, spec in enumerate(specs_local):
             arrays.append(
@@ -356,29 +430,84 @@ def sketch_partials(
     return projected.mapInArrow(build, out_schema)
 
 
-def _merge_fn_factory(group_cols: list[str], specs: list[SketchSpec], out_schema):
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        # deterministic merge order regardless of shuffle arrival
-        pdf = pdf.sort_values("__pid", kind="stable")
-        row: dict = {g: pdf[g].iloc[0] for g in group_cols}
-        row["__pid"] = int(pdf["__pid"].iloc[0])
-        for spec in specs:
-            blobs = pdf[spec.state_col]
-            cls = type(spec.make())
-            merged = cls.from_bytes(blobs.iloc[0])
-            # merge_bytes folds serialized partials in place (one dense
-            # allocation per reducer, not one per partial — Bloom/CMS)
-            fold = getattr(merged, "merge_bytes", None)
-            for b in blobs.iloc[1:]:
-                if fold is not None:
-                    fold(b)
-                else:
-                    merged.merge(cls.from_bytes(b))
-            row[spec.state_col] = merged.to_bytes()
-        row["n_updates"] = int(pdf["n_updates"].sum())
-        return pd.DataFrame([{f.name: row[f.name] for f in out_schema.fields}])
+# list values per fold_groups output batch (32 MiB of int64 blocks): bounds
+# the Python memory of a batch of many large groups
+_FOLD_FLUSH_VALUES = 1 << 22
 
-    return merge_fn
+
+def fold_groups(
+    df: DataFrame,
+    keys: list[str],
+    value_cols: list[str],
+    fold,
+    out_schema: StructType,
+) -> DataFrame:
+    """Group ``df`` by ``keys`` and fold each group's ``value_cols`` rows
+    into one output row: ``keys…`` followed by ``out_schema``'s fields.
+
+    The JVM does the grouping (``collect_list`` of a struct of the value
+    columns per key), so keys follow Spark's own semantics for null,
+    NaN/-0.0 and struct keys. One ``mapInArrow`` call then folds every
+    group of an Arrow batch: ``fold(key, vals)`` gets the group's key
+    tuple and a dict of value column → pyarrow array of the group's rows
+    (in no fixed order), and returns the values of ``out_schema``'s
+    fields. An ``array<bigint>`` value is returned as a numpy int64 array
+    and written as one Arrow list column per batch — no pandas frame per
+    group and no Python list per block. A group with no rows (the one
+    row of a keyless aggregate over empty input) yields no output row.
+
+    Python memory per task: one input batch (Spark's Arrow batch limits)
+    plus at most ``_FOLD_FLUSH_VALUES`` list values of folded output."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    grouped = df.groupBy(*keys).agg(
+        F.collect_list(F.struct(*value_cols)).alias("__vals")
+    )
+    schema = StructType([df.schema[k] for k in keys] + list(out_schema.fields))
+    arrow_schema = to_arrow_schema(schema)
+    nk = len(keys)
+
+    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        import pyarrow as pa
+
+        def emit(batch, kept: list, outs: list):
+            arrays = [batch.column(i).take(kept) for i in range(nk)]
+            for j, fld in enumerate(list(arrow_schema)[nk:]):
+                col = [o[j] for o in outs]
+                if pa.types.is_list(fld.type):
+                    ends = np.cumsum([len(v) for v in col])
+                    arrays.append(
+                        pa.ListArray.from_arrays(
+                            pa.array(np.r_[0, ends], type=pa.int32()),
+                            pa.array(np.concatenate(col), type=fld.type.value_type),
+                        )
+                    )
+                else:
+                    arrays.append(pa.array(col, type=fld.type))
+            return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
+        for batch in batches:
+            lists = batch.column(nk)
+            bounds = lists.offsets.to_numpy()
+            children = {c: lists.values.field(c) for c in value_cols}
+            key_rows = list(zip(*(batch.column(i).to_pylist() for i in range(nk))))
+            kept, outs, pending = [], [], 0
+            for g in range(batch.num_rows):
+                s, e = int(bounds[g]), int(bounds[g + 1])
+                if s == e:
+                    continue
+                vals = {c: a.slice(s, e - s) for c, a in children.items()}
+                out = fold(key_rows[g] if nk else (), vals)
+                kept.append(g)
+                outs.append(out)
+                pending += sum(len(v) for v in out if isinstance(v, np.ndarray))
+                if pending >= _FOLD_FLUSH_VALUES:
+                    yield emit(batch, kept, outs)
+                    kept, outs, pending = [], [], 0
+            if kept:
+                yield emit(batch, kept, outs)
+
+    return grouped.mapInArrow(run, schema)
 
 
 def sketch_merge(
@@ -394,28 +523,42 @@ def sketch_merge(
     most ``fanin`` rows (treeAggregate analog; essential for global sketches
     over ~10⁵ input partitions).
     """
-    in_schema = partials.schema
-    mid_fields = [in_schema[g] for g in group_cols]
-    mid_fields.append(StructField("__pid", IntegerType(), False))
-    mid_fields += [StructField(s.state_col, BinaryType(), False) for s in specs]
-    mid_fields.append(StructField("n_updates", LongType(), False))
-    mid_schema = StructType(mid_fields)
+    state_cols = [s.state_col for s in specs]
+    value_cols = ["__pid"] + state_cols + ["n_updates"]
+    out_schema = StructType(
+        [StructField("__pid", IntegerType(), False)]
+        + [StructField(c, BinaryType(), False) for c in state_cols]
+        + [StructField("n_updates", LongType(), False)]
+    )
+    classes = [type(s.make()) for s in specs]
+
+    def merge(key: tuple, vals: dict) -> list:
+        # deterministic merge order regardless of shuffle arrival
+        pids = vals["__pid"].to_numpy()
+        order = np.argsort(pids, kind="stable")
+        out = [int(pids[order[0]])]
+        for col, cls in zip(state_cols, classes):
+            blobs = vals[col].to_pylist()
+            merged = cls.from_bytes(blobs[order[0]])
+            # merge_bytes folds serialized partials in place (one dense
+            # allocation per reducer, not one per partial — Bloom/CMS)
+            fold = getattr(merged, "merge_bytes", None)
+            for i in order[1:]:
+                if fold is not None:
+                    fold(blobs[i])
+                else:
+                    merged.merge(cls.from_bytes(blobs[i]))
+            out.append(merged.to_bytes())
+        out.append(int(vals["n_updates"].to_numpy().sum()))
+        return out
 
     cur = partials
     if tree_fanin and tree_fanin > 1:
         pre = cur.withColumn("__bucket", F.pmod(F.col("__pid"), F.lit(tree_fanin)))
-        fn = _merge_fn_factory(group_cols, specs, mid_schema)
-        cur = pre.groupBy(*(group_cols + ["__bucket"])).applyInPandas(fn, mid_schema)
-
-    fn = _merge_fn_factory(group_cols, specs, mid_schema)
-    if group_cols:
-        merged = cur.groupBy(*group_cols).applyInPandas(fn, mid_schema)
-    else:
-        merged = (
-            cur.withColumn("__g", F.lit(1))
-            .groupBy("__g")
-            .applyInPandas(fn, mid_schema)
-        )
+        cur = fold_groups(
+            pre, group_cols + ["__bucket"], value_cols, merge, out_schema
+        ).drop("__bucket")
+    merged = fold_groups(cur, group_cols, value_cols, merge, out_schema)
     return merged.drop("__pid")
 
 

@@ -397,6 +397,20 @@ def _blocks_schema(level_type):
     )
 
 
+def _check_level_type(level_type) -> None:
+    """Levels are ordered buckets, selected by value (the most recent
+    ``num_levels``, ``as_of``) and pivoted on as literals: a struct,
+    array or map level is refused on the driver, before any job runs."""
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    if isinstance(level_type, (ArrayType, MapType, StructType)):
+        raise SketchConfigError(
+            f"level column has type {level_type.simpleString()}; the "
+            "partitioned windowed Bloom needs an atomic level (an "
+            "event-time window start, a day number, …)"
+        )
+
+
 def _bloom_geometry(capacity: int, target_fpr: float) -> tuple[int, int, int]:
     """(m bits, k hashes, total int64 words) — exactly the derivation
     ``BloomSketch.__init__`` / the native family use, so blocks built
@@ -505,19 +519,21 @@ def build_windowed_bloom_blocks_df(
     ONE row per (input partition, level, block) carrying the packed
     int32 within-block bit offsets — 4 B per position, no per-row
     overhead (~28 MiB at sf0.1, a 13× shuffle-byte cut; build wall time
-    1.32 s → measured below). The merge stage ORs each block's offset
-    arrays in one numpy scatter. Bit-identical output (same positions,
-    same word layout, OR is order-free) — asserted in tests.
+    1.32 s → measured below). The merge stage (a :func:`fold_groups`
+    fold) ORs each block's offset arrays in one numpy scatter.
+    Bit-identical output (same positions, same word layout, OR is
+    order-free) — asserted in tests.
 
     Per-task memory stays bounded: the partial stage holds one
     partition's offset lists (O(rows·k) int32), the merge stage one
-    block (~``words_per_block``·8 B) + its offset arrays; prefer the
+    Arrow batch of blocks' offset arrays and a bounded output; prefer the
     state-aggregate build (:func:`windowed_bloom_states` →
     :func:`windowed_states_to_blocks_df`, which shuffles only per-
     partition partial states) whenever a level fits one task.
 
-    ``level_col`` is any groupable bucketing column (an event-time window
-    start, a day number, …)."""
+    ``level_col`` is any atomic bucketing column (an event-time window
+    start, a day number, …); a null level is a level of its own. Struct,
+    array and map levels raise :class:`SketchConfigError`."""
     from typing import Iterator
 
     import pyarrow as pa
@@ -526,6 +542,9 @@ def build_windowed_bloom_blocks_df(
     from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
 
     from probabilistic_rs_spark.operators.sketch_agg import (
+        batch_groups,
+        fold_groups,
+        key_runs,
         native_bloom_base_hash_exprs,
     )
 
@@ -542,6 +561,7 @@ def build_windowed_bloom_blocks_df(
         F.col(level_col).alias("level"), h1e.alias("__h1"), h2e.alias("__h2")
     )
     level_field = proj.schema["level"]
+    _check_level_type(level_field.dataType)
     mid_schema = StructType(
         [
             level_field,
@@ -554,7 +574,8 @@ def build_windowed_bloom_blocks_df(
     m_u, k_, wpb_ = np.uint64(m), int(k), int(wpb)
 
     def partials(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        acc: dict = {}  # level value -> dict[block -> list[np.ndarray int32 offs]]
+        # level key -> (the level as a one-row array, dict[block -> list[int32 offs]])
+        acc: dict = {}
         for batch in batches:
             n = batch.num_rows
             if n == 0:
@@ -567,21 +588,20 @@ def build_windowed_bloom_blocks_df(
             ).view(np.uint64)
             i = np.arange(k_, dtype=np.uint64)[None, :]
             pos = (h1[:, None] + i * h2[:, None]) % m_u  # (n, k), < m < 2^32
-            gframe = pa.Table.from_batches([batch]).select(["level"]).to_pandas()
-            groups = gframe.groupby("level", sort=False, dropna=False).indices
-            for lvl, rows in groups.items():
-                p = pos[np.asarray(rows)].ravel()
+            for lvl, rows in batch_groups(batch, ["level"]):
+                p = pos[rows].ravel()
                 blocks = (p >> np.uint64(6)) // np.uint64(wpb_)
                 offs = (p - blocks * np.uint64(bits_per_block)).astype(np.int32)
-                lvl_acc = acc.setdefault(lvl, {})
-                for b in np.unique(blocks):
-                    lvl_acc.setdefault(int(b), []).append(offs[blocks == b])
+                if lvl not in acc:
+                    acc[lvl] = (batch.column(0).take([rows[0]]), {})
+                for b, sel in key_runs(blocks):
+                    acc[lvl][1].setdefault(int(b), []).append(offs[sel])
         if not acc:
             return
         levels, blks, payloads = [], [], []
-        for lvl, lvl_acc in acc.items():
+        for level, lvl_acc in acc.values():
             for b, chunks in lvl_acc.items():
-                levels.append(lvl)
+                levels.append(level)
                 blks.append(b)
                 payloads.append(
                     chunks[0].tobytes()
@@ -590,7 +610,7 @@ def build_windowed_bloom_blocks_df(
                 )
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array(levels, type=arrow_mid.field(0).type),
+                pa.concat_arrays(levels).cast(arrow_mid.field(0).type),
                 pa.array(blks, type=pa.int32()),
                 pa.array(payloads, type=pa.binary()),
             ],
@@ -598,28 +618,17 @@ def build_windowed_bloom_blocks_df(
         )
 
     mid = proj.mapInArrow(partials, mid_schema)
-    schema = _blocks_schema(level_field.dataType)
 
-    def scatter(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        lvl, block = key[0], int(key[1])
-        blen = min(wpb, n_words - block * wpb)
-        words = np.zeros(blen, dtype=np.uint64)
-        offs = np.frombuffer(b"".join(pdf["offs"]), dtype=np.int32)
-        widx = (offs >> 6).astype(np.int64)
+    def or_bits(key: tuple, vals: dict) -> tuple:
+        block = key[1]
+        words = np.zeros(min(wpb, n_words - block * wpb), dtype=np.uint64)
+        offs = np.frombuffer(b"".join(vals["offs"].to_pylist()), dtype=np.int32)
         bits = np.uint64(1) << (offs & 63).astype(np.uint64)
-        np.bitwise_or.at(words, widx, bits)
-        return pd.DataFrame(
-            {
-                "level": [lvl],
-                "block": pd.Series([block], dtype="int32"),
-                "words": [words.view(np.int64).tolist()],
-                "m": pd.Series([m], dtype="int64"),
-                "k": pd.Series([k], dtype="int32"),
-                "words_per_block": pd.Series([wpb], dtype="int32"),
-            }
-        )
+        np.bitwise_or.at(words, offs >> 6, bits)
+        return words.view(np.int64), m, k, wpb
 
-    return mid.groupBy("level", "block").applyInPandas(scatter, schema)
+    out_schema = StructType(_blocks_schema(level_field.dataType).fields[2:])
+    return fold_groups(mid, ["level", "block"], ["offs"], or_bits, out_schema)
 
 
 def _blocks_meta(blocks_df: DataFrame) -> tuple[int, int, int, list] | None:
@@ -695,6 +704,7 @@ def windowed_bloom_partitioned_probe(
     ADVICE r6); together, the N most recent at/before the cutoff."""
     from probabilistic_rs_spark.common import ensure_persisted
 
+    _check_level_type(blocks_df.schema["level"].dataType)
     blocks_df = ensure_persisted(blocks_df)
     meta = _blocks_meta(blocks_df)
     if meta is None:

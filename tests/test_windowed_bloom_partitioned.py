@@ -5,6 +5,8 @@
   broadcast ``native_probe_recent``;
 * blocks built DIRECTLY from events (never materializing a level) are
   bit-identical to blocks exploded from built states;
+* a null level is a level of its own in the direct build (bit-identical
+  to the states explode); a struct level fails on the driver;
 * per-level AND / cross-level OR semantics, level expiry via num_levels;
 * mixed-geometry and wrong-engine inputs fail loudly;
 * the probe plan needs no broadcast: with broadcast joins disabled it is
@@ -98,6 +100,57 @@ class TestPartitionedProbe:
             for r in blocks.collect()
         )
         assert a == b
+
+    def test_null_level_direct_build_bit_identical_to_states_explode(self, spark):
+        # users ending in 7 lose their bucket: a null level is a level of
+        # its own in both builds, and the probe still finds every user
+        ev = _events(spark).withColumn(
+            "bucket",
+            F.when(F.col("user").endswith("7"), F.lit(None)).otherwise(F.col("bucket")),
+        )
+        spec = SketchSpec(
+            "bloom", "nbloom", "user", {"capacity": CAP, "false_positive_rate": FPR}
+        )
+        states = sketch_aggregate(ev, ["bucket"], [spec]).withColumnRenamed(
+            "bucket", "window_start"
+        )
+        exploded = windowed_states_to_blocks_df(states, num_levels=4, words_per_block=64)
+        direct = build_windowed_bloom_blocks_df(
+            ev.withColumnRenamed("bucket", "level"), "level", "user",
+            capacity_per_level=CAP, target_fpr=FPR, words_per_block=64,
+        )
+
+        def rows(df):
+            return sorted(
+                (r["level"] is None, r["level"] or 0, r["block"], tuple(r["words"]), r["m"], r["k"])
+                for r in df.collect()
+            )
+
+        a = rows(direct)
+        assert a == rows(exploded)
+        assert any(r[0] for r in a), "no blocks for the null level"
+        probed = windowed_bloom_partitioned_probe(ev.select("user"), "user", direct)
+        assert probed.where(~F.col("is_member")).count() == 0
+
+    def test_struct_level_refused_on_driver(self, spark, built):
+        ev, _, blocks = built
+        sc = spark.sparkContext
+        sc.setJobGroup("struct-level", "a refused level type runs no job")
+        try:
+            with pytest.raises(SketchConfigError, match="atomic level"):
+                build_windowed_bloom_blocks_df(
+                    ev.withColumn("bucket", F.struct("bucket")), "bucket", "user",
+                    capacity_per_level=CAP, target_fpr=FPR, words_per_block=64,
+                )
+            with pytest.raises(SketchConfigError, match="atomic level"):
+                windowed_bloom_partitioned_probe(
+                    ev.select("user"), "user",
+                    blocks.withColumn("level", F.struct("level")),
+                )
+            assert list(sc.statusTracker().getJobIdsForGroup("struct-level")) == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
 
     def test_level_expiry_and_cross_level_or(self, spark, built):
         ev, _, blocks = built
