@@ -1,35 +1,30 @@
-"""Human-readable size helpers — behavioral parity with the reference's
-``src/common.rs:4-27`` (``bytes2hr`` prints integer bytes below 1 KiB;
-``bits2hr`` always prints two decimals, including the bytes range) —
-plus the shared sketch-state cache-key digest."""
+"""Shared helpers: sketch-state cache keys, the keyed LRU caches behind
+every broadcast probe, the persist contract of the partitioned probe
+families and the ops-log / shard checks of the cuckoo and quotient
+folds."""
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
-_KB = 1024.0
-_MB = 1024.0 * 1024.0
-_GB = 1024.0 * 1024.0 * 1024.0
 
-
-def bytes2hr(n_bytes: int) -> str:
-    if n_bytes < 1024:
-        return f"{n_bytes} bytes"
-    if n_bytes < 1024 * 1024:
-        return f"{n_bytes / _KB:.2f} KB"
-    if n_bytes < 1024 * 1024 * 1024:
-        return f"{n_bytes / _MB:.2f} MB"
-    return f"{n_bytes / _GB:.2f} GB"
-
-
-def state_key(state: bytes) -> str:
+def state_key(state) -> str:
     """Canonical cache key for a serialized sketch state: sha1 of the FULL
-    blob. Every probe-family cache (executor filter caches, the driver
-    words-relation cache) keys on this — a truncated head/tail digest can
+    blob. Every probe cache (``RELATIONS``, ``BROADCASTS``, ``DECODED``)
+    keys on this — a truncated head/tail digest can
     collide for same-length states differing only mid-blob, and hashing
     the full state (µs at sketch sizes) is negligible next to a broadcast
-    (VERDICT r3 #5)."""
-    return hashlib.sha1(state).hexdigest()
+    (VERDICT r3 #5). A list of blobs (cuckoo shards, windowed levels) is
+    digested blob by blob with each length in front, so no two lists
+    share a key by where their blob boundaries fall."""
+    if isinstance(state, (bytes, bytearray, memoryview)):
+        return hashlib.sha1(state).hexdigest()
+    h = hashlib.sha1()
+    for blob in state:
+        h.update(len(blob).to_bytes(8, "little"))
+        h.update(blob)
+    return h.hexdigest()
 
 
 def lru_evict(cache: dict, max_entries: int, release=None) -> None:
@@ -48,6 +43,92 @@ def lru_evict(cache: dict, max_entries: int, release=None) -> None:
                 release(old)
             except Exception:
                 pass
+
+
+_MISSING = object()
+
+
+class KeyedCache:
+    """An LRU memo holding at most ``max_entries`` values. A hit moves
+    its entry to the young end; a miss builds the value with ``make()``
+    and evicts the oldest entries past the bound, passing each to
+    ``release``.
+
+    ``session_scoped=True``: every key starts with the Spark application
+    id, and a miss first drops the entries of every other application —
+    a cached DataFrame or a broadcast belongs to the SparkContext that
+    made it, so after a session restart the same state is built afresh.
+    Dropped entries are not released: their context is stopped, and a
+    stale ``Broadcast.unpersist`` goes through the running context, whose
+    broadcast ids restart at 0, so it would unpersist a live broadcast."""
+
+    def __init__(self, max_entries: int, release=None, session_scoped: bool = False):
+        self.max_entries = max_entries
+        self.release = release
+        self.session_scoped = session_scoped
+        self.entries: dict = {}
+
+    def get(self, key: tuple, make):
+        value = self.entries.pop(key, _MISSING)
+        if value is _MISSING:
+            if self.session_scoped:
+                for stale in [k for k in self.entries if k[0] != key[0]]:
+                    del self.entries[stale]
+            value = make()
+        self.entries[key] = value
+        lru_evict(self.entries, self.max_entries, self.release)
+        return value
+
+    def clear(self) -> None:
+        self.entries.clear()
+
+    def __len__(self) -> int:
+        return len(self.entries)
+
+
+RELATION_ENTRIES = 8
+BROADCAST_ENTRIES = 16
+DECODED_ENTRIES = 8
+
+# driver side: the cached one-row state relations of the native probes,
+# keyed by (application id, family, state digest, geometry...)
+RELATIONS = KeyedCache(
+    RELATION_ENTRIES, release=lambda df: df.unpersist(), session_scoped=True
+)
+# driver side: the broadcast states of the pandas-kernel probes, keyed by
+# (application id, family, state digest)
+BROADCASTS = KeyedCache(
+    BROADCAST_ENTRIES, release=lambda bc: bc.unpersist(), session_scoped=True
+)
+# worker side: states decoded from those broadcasts, keyed by (family,
+# state digest) — one decode per Python worker, not one per Arrow batch
+DECODED = KeyedCache(DECODED_ENTRIES)
+
+
+def _decoded(key: tuple, bc, decode):
+    read = decode.from_bytes if isinstance(decode, type) else decode
+    return DECODED.get(key, lambda: read(bc.value))
+
+
+def session_broadcast(sc, key: tuple, payload):
+    """The broadcast of ``payload`` under ``key`` (a family tag and the
+    state digest) in this session, made on first use and kept in
+    ``BROADCASTS``: repeated probes of one state share one broadcast."""
+    return BROADCASTS.get((sc.applicationId, *key), lambda: sc.broadcast(payload))
+
+
+def broadcast_state(sc, key: tuple, payload, decode):
+    """:func:`session_broadcast` plus a zero-argument loader for use
+    inside a Python UDF: it returns the decoded payload, decoded once per
+    Python worker and kept in ``DECODED``. ``decode`` is a sketch class
+    (read with its ``from_bytes``) or a module-level function of the
+    payload: both pickle by reference, a bound classmethod does not.
+    The loader is a partial of a module-level function, so the worker
+    resolves ``DECODED`` in its own imported module; a cache dict
+    referenced from the UDF's closure would be pickled with it and start
+    empty in every task."""
+    bc = session_broadcast(sc, key, payload)
+    return functools.partial(_decoded, key, bc, decode)
 
 
 # Internally-persisted blocks tables (partitioned probe families).
@@ -149,14 +230,3 @@ def shard_cogroup_cols(states_df) -> list[str]:
         if "n_shards" in states_df.columns
         else ["shard", "state"]
     )
-
-
-def bits2hr(n_bits: int) -> str:
-    b = n_bits / 8.0
-    if b < _KB:
-        return f"{b:.2f} bytes"
-    if b < _MB:
-        return f"{b / _KB:.2f} KB"
-    if b < _GB:
-        return f"{b / _MB:.2f} MB"
-    return f"{b / _GB:.2f} GB"

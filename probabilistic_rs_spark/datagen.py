@@ -686,18 +686,6 @@ def jpeg_for_id(doc_id: int) -> bytes:
     return jpeg_from_array(img)
 
 
-def with_jpeg_payload(df, id_col: str, out_col: str = "payload"):
-    """Adds a deterministic grayscale-JPEG binary column from ``id_col``."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
-    gen = pandas_udf(
-        lambda ids: ids.map(lambda i: jpeg_for_id(int(i))), BinaryType()
-    )
-    return df.withColumn(out_col, gen(F.col(id_col).cast("long")))
-
-
 def wav_from_array(samples, rate: int = 8000) -> bytes:
     """Encode an (n_frames, channels) int16 array as a PCM RIFF/WAVE
     file — raw little-endian samples behind the standard fmt/data
@@ -822,46 +810,6 @@ def with_media_payload(df, id_col: str, out_col: str = "payload"):
 
     gen = pandas_udf(
         lambda ids: ids.map(lambda i: media_payload_for_id(int(i))), BinaryType()
-    )
-    return df.withColumn(out_col, gen(F.col(id_col).cast("long")))
-
-
-def with_gif_payload(df, id_col: str, out_col: str = "payload"):
-    """Adds a deterministic GIF binary column derived from ``id_col``."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
-    gen = pandas_udf(
-        lambda ids: ids.map(lambda i: gif_for_id(int(i))), BinaryType()
-    )
-    return df.withColumn(out_col, gen(F.col(id_col).cast("long")))
-
-
-def with_png_payload(df, id_col: str, out_col: str = "payload"):
-    """Adds a deterministic PNG binary column derived from ``id_col``."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
-    gen = pandas_udf(
-        lambda ids: ids.map(lambda i: png_for_id(int(i))), BinaryType()
-    )
-    return df.withColumn(out_col, gen(F.col(id_col).cast("long")))
-
-
-def with_bmp_payload(df, id_col: str, out_col: str = "payload"):
-    """Adds a deterministic BMP binary column derived from ``id_col`` —
-    vectorized ``pandas_udf`` fixture generation (test input synthesis,
-    not an engine hot path)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
-    # lambda form: the local `pd` alias isn't resolvable from a string
-    # type hint inside a nested scope, so skip hints and pass returnType
-    gen = pandas_udf(
-        lambda ids: ids.map(lambda i: bmp_for_id(int(i))), BinaryType()
     )
     return df.withColumn(out_col, gen(F.col(id_col).cast("long")))
 

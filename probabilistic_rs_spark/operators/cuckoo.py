@@ -45,12 +45,14 @@ from pyspark.sql.types import (
 )
 
 from probabilistic_rs_spark.common import (
+    broadcast_state,
     check_shard_modulus as _check_shard_modulus,
-    lru_evict,
     op_masks as _op_masks,
     shard_cogroup_cols as _shard_cogroup_cols,
+    state_key,
 )
 from probabilistic_rs_spark.errors import SketchConfigError
+from probabilistic_rs_spark.operators.sketch_agg import broadcast_state_probe, semi_filter
 from probabilistic_rs_spark.sketches.base import TYPE_CUCKOO, TYPE_NCUCKOO, peek_type
 from probabilistic_rs_spark.sketches.cuckoo import CuckooFilter, NativeCuckooFilter
 from probabilistic_rs_spark.sketches.quotient import DEFAULT_MAX_STATE_BYTES
@@ -490,35 +492,8 @@ def cuckoo_delete_df(
     return new_states.withColumn("n_shards", F.lit(ns))
 
 
-# executor-side cache of deserialized shard lists, keyed by a content
-# hash (an id()-based key could collide after GC recycles the address
-# and silently serve a stale filter list); driver-side broadcast memo so
-# repeated probes of the same states reuse one broadcast
-_SHARDS_CACHE: dict[str, list[CuckooFilter]] = {}
-_SHARD_BROADCASTS: dict[tuple, object] = {}
-
-
-def _shards_broadcast(sc, shard_states: list[bytes]):
-    import hashlib
-
-    h = hashlib.sha1()
-    for s in shard_states:
-        h.update(len(s).to_bytes(8, "little"))
-        h.update(s)
-    key = h.hexdigest()
-    memo_key = (sc.applicationId, key)
-    entry = _SHARD_BROADCASTS.get(memo_key)
-    if entry is None:
-        entry = (key, sc.broadcast(shard_states))
-        _SHARD_BROADCASTS[memo_key] = entry
-        # oldest-only eviction (VERDICT r4 #3): the 16 still-hot entries
-        # survive when a 17th family appears
-        lru_evict(_SHARD_BROADCASTS, 16, lambda e: e[1].unpersist())
-    else:
-        # refresh recency so interleaved probe families evict true-coldest
-        _SHARD_BROADCASTS.pop(memo_key)
-        _SHARD_BROADCASTS[memo_key] = entry
-    return entry
+def _decode_shards(blobs: list[bytes]) -> list:
+    return [_filter_from_bytes(b) for b in blobs]
 
 
 def cuckoo_probe(
@@ -533,16 +508,16 @@ def cuckoo_probe(
     the same states reuse one broadcast and a per-worker cache."""
     from pyspark.sql.functions import pandas_udf
 
-    sc = probe_df.sparkSession.sparkContext
-    key, bc = _shards_broadcast(sc, shard_states)
+    load = broadcast_state(
+        probe_df.sparkSession.sparkContext,
+        ("cuckoo", state_key(shard_states)),
+        shard_states,
+        _decode_shards,
+    )
     ns = len(shard_states)
 
     def _probe(hashes):
-        shards = _SHARDS_CACHE.get(key)
-        if shards is None:
-            shards = [_filter_from_bytes(b) for b in bc.value]
-            _SHARDS_CACHE[key] = shards
-            lru_evict(_SHARDS_CACHE, 4)
+        shards = load()
         h = hashes.to_numpy(dtype="int64").view(np.uint64)
         sid = (hashes.to_numpy(dtype="int64") % ns + ns) % ns
         out = np.zeros(len(h), dtype=bool)
@@ -625,39 +600,6 @@ def cuckoo_delete(
     return new_states, removed
 
 
-# driver-side cache of the one-row shard-tables relation, keyed by
-# (applicationId, combined digest) — membership._WORDS_DF_CACHE idiom
-_TABLES_DF_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _cuckoo_tables_df(spark, shard_states: list[bytes], shards: list):
-    import hashlib
-
-    app_id = spark.sparkContext.applicationId
-    h = hashlib.sha1()
-    for s in shard_states:
-        h.update(len(s).to_bytes(8, "little"))
-        h.update(s)
-    key = (app_id, h.hexdigest())
-    df = _TABLES_DF_CACHE.get(key)
-    if df is None:
-        for old_key in [k for k in _TABLES_DF_CACHE if k[0] != app_id]:
-            try:
-                _TABLES_DF_CACHE.pop(old_key).unpersist()
-            except Exception:
-                pass
-        nested = [sk.table.ravel().astype(np.int64).tolist() for sk in shards]
-        df = spark.createDataFrame(
-            [(nested,)], "__ck_tables array<array<bigint>>"
-        ).cache()
-        _TABLES_DF_CACHE[key] = df
-        lru_evict(_TABLES_DF_CACHE, 8, lambda d: d.unpersist())
-    else:
-        _TABLES_DF_CACHE.pop(key)
-        _TABLES_DF_CACHE[key] = df
-    return df
-
-
 def _native_cuckoo_member_expr(item_col: str, tables, ns: int, m: int, fb: int, b: int):
     """The JVM membership predicate for native cuckoo shards:
 
@@ -706,7 +648,7 @@ def native_cuckoo_probe(
     honored for free (a deleted fingerprint is simply absent from the
     broadcast table). Identical verdicts to :func:`cuckoo_probe` on the
     same states by construction."""
-    shards = [_filter_from_bytes(b) for b in shard_states]
+    shards = _decode_shards(shard_states)
     if not all(isinstance(sk, NativeCuckooFilter) for sk in shards):
         raise SketchConfigError(
             "native_cuckoo_probe requires shards built with native=True "
@@ -716,23 +658,15 @@ def native_cuckoo_probe(
     if len(geo) != 1:
         raise SketchConfigError(f"shards disagree on geometry: {geo}")
     m, fb, b = geo.pop()
-    tdf = _cuckoo_tables_df(probe_df.sparkSession, shard_states, shards)
-    from probabilistic_rs_spark.operators.sketch_agg import pushdown_barrier
-
-    # pushdown_barrier (round 8): keeps a downstream .where(is_member)
-    # from inlining the 2·b slot tests into the join condition, where the
-    # shared h/g/fp hash chain is re-evaluated per slot test per row
-    # (join conditions get no codegen subexpression elimination)
-    member = pushdown_barrier(
-        _native_cuckoo_member_expr(
-            item_col, F.col("__ck_tables"), len(shard_states), m, fb, b
-        ),
+    ns = len(shard_states)
+    return broadcast_state_probe(
+        probe_df,
+        ("ncuckoo", state_key(shard_states)),
+        "__ck_tables array<array<bigint>>",
+        lambda: [sk.table.ravel().astype(np.int64).tolist() for sk in shards],
+        lambda tables: _native_cuckoo_member_expr(item_col, tables, ns, m, fb, b),
+        out_col,
         boolean=True,
-    )
-    return (
-        probe_df.crossJoin(F.broadcast(tdf))
-        .withColumn(out_col, member)
-        .drop("__ck_tables")
     )
 
 
@@ -744,27 +678,4 @@ def native_cuckoo_semi_filter(
     in the join condition it would be evaluated without codegen CSE,
     re-deriving the h/g/fp hash chain per slot test per row) and the
     filter reads the materialized bit."""
-    shards = [_filter_from_bytes(b) for b in shard_states]
-    if not all(isinstance(sk, NativeCuckooFilter) for sk in shards):
-        raise SketchConfigError(
-            "native_cuckoo_semi_filter requires shards built with native=True"
-        )
-    geo = {(sk.m, sk.fingerprint_bits, sk.bucket_size) for sk in shards}
-    if len(geo) != 1:
-        raise SketchConfigError(f"shards disagree on geometry: {geo}")
-    m, fb, b = geo.pop()
-    tdf = _cuckoo_tables_df(probe_df.sparkSession, shard_states, shards)
-    from probabilistic_rs_spark.operators.sketch_agg import pushdown_barrier
-
-    member = pushdown_barrier(
-        _native_cuckoo_member_expr(
-            item_col, F.col("__ck_tables"), len(shard_states), m, fb, b
-        ),
-        boolean=True,
-    )
-    return (
-        probe_df.crossJoin(F.broadcast(tdf))
-        .withColumn("__nck_member", member)
-        .where(F.col("__nck_member"))
-        .drop("__ck_tables", "__nck_member")
-    )
+    return semi_filter(native_cuckoo_probe, probe_df, item_col, shard_states)

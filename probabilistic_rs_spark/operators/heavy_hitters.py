@@ -47,8 +47,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from probabilistic_rs_spark.common import broadcast_state, state_key
 from probabilistic_rs_spark.errors import SketchConfigError
-from probabilistic_rs_spark.operators.sketch_agg import fold_groups, key_runs
+from probabilistic_rs_spark.operators import sketch_agg
+from probabilistic_rs_spark.operators.sketch_agg import (
+    broadcast_state_probe,
+    fold_groups,
+    key_runs,
+)
 from probabilistic_rs_spark.sketches.cms import CountMinSketch
 
 _PARTIAL_SCHEMA = StructType(
@@ -283,29 +289,6 @@ def build_cms_state(
     return bytes(row["cms_state"])
 
 
-# driver-side broadcast reuse: repeated probes against the same state
-# share one broadcast instead of leaking a new one per call
-_PROBE_BROADCASTS: dict[tuple, object] = {}
-# executor-side cache: deserialize a broadcast CMS once per worker, not
-# once per Arrow batch (same pattern as membership._FILTER_CACHE)
-_CMS_CACHE: dict[str, CountMinSketch] = {}
-
-
-def _cms_broadcast(sc, state: bytes):
-    import hashlib
-
-    key = hashlib.sha1(state).hexdigest()
-    memo_key = (sc.applicationId, key)
-    bc = _PROBE_BROADCASTS.get(memo_key)
-    if bc is None:
-        from probabilistic_rs_spark.common import lru_evict
-
-        bc = sc.broadcast(state)
-        _PROBE_BROADCASTS[memo_key] = (key, bc)
-        lru_evict(_PROBE_BROADCASTS, 32, lambda e: e[1].unpersist())
-    return _PROBE_BROADCASTS[memo_key]
-
-
 def cms_probe(
     probe_df: DataFrame,
     key_col: str,
@@ -322,51 +305,22 @@ def cms_probe(
     driver broadcast and a per-worker deserialized-CMS cache."""
     from pyspark.sql.functions import pandas_udf
 
-    sc = probe_df.sparkSession.sparkContext
-    key, bc = _cms_broadcast(sc, state)
+    load = broadcast_state(
+        probe_df.sparkSession.sparkContext,
+        ("cms", state_key(state)),
+        state,
+        CountMinSketch,
+    )
 
     @pandas_udf(LongType())
     def est(hashes: pd.Series) -> pd.Series:
-        from probabilistic_rs_spark.common import lru_evict
-
-        cms = _CMS_CACHE.get(key)
-        if cms is None:
-            cms = CountMinSketch.from_bytes(bc.value)
-            _CMS_CACHE[key] = cms
-            lru_evict(_CMS_CACHE, 8)
+        cms = load()
         h = hashes.to_numpy(dtype="int64").view(np.uint64)
         return pd.Series(cms.estimate_hashes(h).astype(np.int64))
 
     return probe_df.withColumn(
         out_col, est(F.xxhash64(F.col(key_col).cast("string")))
     )
-
-
-# driver-side cache of the one-row table relation per (session, state
-# digest) — same idiom as membership._WORDS_DF_CACHE
-_CMS_TABLE_DF_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _cms_table_df(spark, state: bytes, cms: CountMinSketch) -> DataFrame:
-    from probabilistic_rs_spark.common import state_key
-
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, state_key(state))
-    df = _CMS_TABLE_DF_CACHE.get(key)
-    if df is None:
-        for old_key in [k for k in _CMS_TABLE_DF_CACHE if k[0] != app_id]:
-            try:
-                _CMS_TABLE_DF_CACHE.pop(old_key).unpersist()
-            except Exception:
-                pass
-        df = spark.createDataFrame(
-            [(cms.table.tolist(),)], "__cms_rows array<array<bigint>>"
-        ).cache()
-        _CMS_TABLE_DF_CACHE[key] = df
-        from probabilistic_rs_spark.common import lru_evict
-
-        lru_evict(_CMS_TABLE_DF_CACHE, 8, lambda d: d.unpersist())
-    return df
 
 
 def native_cms_probe(
@@ -388,28 +342,26 @@ def native_cms_probe(
     d row lookups, evaluated inside whole-stage codegen. Identical
     estimates to :func:`cms_probe` by construction."""
     cms = CountMinSketch.from_bytes(state)
-    tdf = _cms_table_df(probe_df.sparkSession, state, cms)
     h = F.xxhash64(F.col(key_col).cast("string"))
     h1 = F.call_function("shiftrightunsigned", h, F.lit(32))
     h2 = h.bitwiseAND(F.lit(0xFFFFFFFF)).bitwiseOR(F.lit(1))
     mask = F.lit(int(cms.w - 1))
-    lookups = []
-    for j in range(cms.d):
-        cell = (h1 + F.lit(int(j)) * h2).bitwiseAND(mask)
-        row = F.element_at(F.col("__cms_rows"), F.lit(int(j) + 1))
-        lookups.append(F.element_at(row, cell.cast("int") + F.lit(1)))
-    est = F.least(*lookups) if len(lookups) > 1 else lookups[0]
-    from probabilistic_rs_spark.operators.sketch_agg import pushdown_barrier
 
-    # pushdown_barrier (round 8): keeps a downstream filter on the
-    # estimate from inlining the d lookups into the join condition (no
-    # codegen CSE there — the shared xxhash64/h1/h2 chain re-evaluates
-    # per lookup per row); the barriered ProjectExec computes them once
-    est = pushdown_barrier(est)
-    return (
-        probe_df.crossJoin(F.broadcast(tdf))
-        .withColumn(out_col, est)
-        .drop("__cms_rows")
+    def estimate(rows):
+        lookups = []
+        for j in range(cms.d):
+            cell = (h1 + F.lit(int(j)) * h2).bitwiseAND(mask)
+            row = F.element_at(rows, F.lit(int(j) + 1))
+            lookups.append(F.element_at(row, cell.cast("int") + F.lit(1)))
+        return F.least(*lookups) if len(lookups) > 1 else lookups[0]
+
+    return broadcast_state_probe(
+        probe_df,
+        ("cms", state_key(state)),
+        "__cms_rows array<array<bigint>>",
+        lambda: cms.table.tolist(),
+        estimate,
+        out_col,
     )
 
 
@@ -577,8 +529,10 @@ def build_cms_blocks_df(
     # applyInPandas sort of all of them. The cell targets are now derived
     # in a mapInArrow stage over the aggregated (hash, count) rows —
     # identical KM arithmetic in uint64 — and each (partition, row,
-    # block) emits ONE row with packed int32 offsets + int64 counts
-    # (12 B/cell, no row overhead). The scatter, a fold_groups merge,
+    # block) emits one row with packed int32 offsets + int64 counts
+    # (12 B/cell, no row overhead) per flush: the stage emits what it
+    # holds whenever it passes sketch_agg._PARTIAL_FLUSH_BYTES, so its
+    # memory is bounded per task. The scatter, a fold_groups merge,
     # sums them per block with one np.add.at. Cell sums are order-free,
     # so the blocks table is bit-identical to the explode formulation's.
     mid_schema = StructType(
@@ -590,11 +544,37 @@ def build_cms_blocks_df(
         ]
     )
     d_, w_u, cpb_ = int(d), np.uint64(w), np.uint64(cpb)
+    budget = sketch_agg._PARTIAL_FLUSH_BYTES
 
     def derive(batches):
         import pyarrow as pa
 
         acc: dict = {}  # (row, block) -> list[(offs int32[], cnts int64[])]
+
+        def flush() -> "pa.RecordBatch":
+            rows, blks, offs_p, cnts_p = [], [], [], []
+            for (j, b), chunks in acc.items():
+                rows.append(j)
+                blks.append(b)
+                if len(chunks) == 1:
+                    o, cc = chunks[0]
+                else:
+                    o = np.concatenate([x[0] for x in chunks])
+                    cc = np.concatenate([x[1] for x in chunks])
+                offs_p.append(o.tobytes())
+                cnts_p.append(cc.tobytes())
+            acc.clear()
+            return pa.RecordBatch.from_arrays(
+                [
+                    pa.array(rows, type=pa.int32()),
+                    pa.array(blks, type=pa.int32()),
+                    pa.array(offs_p, type=pa.binary()),
+                    pa.array(cnts_p, type=pa.binary()),
+                ],
+                names=["row", "block", "offs", "cnts"],
+            )
+
+        held = 0
         for batch in batches:
             if batch.num_rows == 0:
                 continue
@@ -613,28 +593,12 @@ def build_cms_blocks_df(
                 offs = (cells - blocks * cpb_).astype(np.int32)
                 for b, sel in key_runs(blocks):
                     acc.setdefault((j, int(b)), []).append((offs[sel], c[sel]))
-        if not acc:
-            return
-        rows, blks, offs_p, cnts_p = [], [], [], []
-        for (j, b), chunks in acc.items():
-            rows.append(j)
-            blks.append(b)
-            if len(chunks) == 1:
-                o, cc = chunks[0]
-            else:
-                o = np.concatenate([x[0] for x in chunks])
-                cc = np.concatenate([x[1] for x in chunks])
-            offs_p.append(o.tobytes())
-            cnts_p.append(cc.tobytes())
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(rows, type=pa.int32()),
-                pa.array(blks, type=pa.int32()),
-                pa.array(offs_p, type=pa.binary()),
-                pa.array(cnts_p, type=pa.binary()),
-            ],
-            names=["row", "block", "offs", "cnts"],
-        )
+                held += offs.nbytes + c.nbytes
+            if held >= budget:
+                yield flush()
+                held = 0
+        if acc:
+            yield flush()
 
     mid = counts.mapInArrow(derive, mid_schema)
     schema = StructType(

@@ -17,18 +17,15 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
-from probabilistic_rs_spark.common import state_key
+from probabilistic_rs_spark.common import broadcast_state, state_key
 from probabilistic_rs_spark.operators.sketch_agg import (
     SketchSpec,
+    broadcast_state_probe,
     build_global_state,
+    semi_filter,
     sketch_aggregate,
 )
 from probabilistic_rs_spark.sketches.bloom import BloomSketch
-
-# executor-side cache: deserialize a broadcast filter once per worker,
-# not once per Arrow batch (analog of the reference's long-lived filter
-# object behind Arc<RwLock>, src/bloom/filter.rs:20-34)
-_FILTER_CACHE: dict[str, BloomSketch] = {}
 
 
 def build_bloom_state(
@@ -55,17 +52,6 @@ def build_bloom_state(
     return build_global_state(df, spec, tree_fanin)
 
 
-def _get_filter(key: str, blob: bytes) -> BloomSketch:
-    from probabilistic_rs_spark.common import lru_evict
-
-    sk = _FILTER_CACHE.get(key)
-    if sk is None:
-        sk = BloomSketch.from_bytes(blob)
-        _FILTER_CACHE[key] = sk
-        lru_evict(_FILTER_CACHE, 8)
-    return sk
-
-
 def bloom_probe(
     probe_df: DataFrame,
     item_col: str,
@@ -74,10 +60,15 @@ def bloom_probe(
 ) -> DataFrame:
     """Adds a boolean membership column. Zero false negatives guaranteed
     (reference gate ``tests/core_bloom_filter_tests.rs:402-420``); false
-    positives bounded by the filter's configured FPR."""
-    sc = probe_df.sparkSession.sparkContext
-    bc = sc.broadcast(state)
-    key = state_key(state)
+    positives bounded by the filter's configured FPR. Repeated probes of
+    one state share one broadcast, and each Python worker decodes it once
+    (the reference's long-lived filter object, src/bloom/filter.rs:20-34)."""
+    load = broadcast_state(
+        probe_df.sparkSession.sparkContext,
+        ("bloom", state_key(state)),
+        state,
+        BloomSketch,
+    )
 
     @pandas_udf(BooleanType())
     def probe(items: pd.Series) -> pd.Series:
@@ -85,7 +76,7 @@ def bloom_probe(
 
         from probabilistic_rs_spark.functions.hashing import pad_batch_arrow
 
-        sk = _get_filter(key, bc.value)
+        sk = load()
         buf, lens = pad_batch_arrow(
             pa.Array.from_pandas(items, type=pa.string()), scratch_key="bloom_probe"
         )
@@ -100,7 +91,7 @@ def bloom_semi_filter(
     """Approximate semi-join pre-filter: keep rows whose key is (probably)
     in the filter. At 100 TB this prunes the expensive exact join's input;
     the exact join downstream removes the ≤FPR false positives."""
-    return bloom_probe(probe_df, item_col, state).where(F.col("is_member")).drop("is_member")
+    return semi_filter(bloom_probe, probe_df, item_col, state)
 
 
 # ---------------------------------------------------------------------------
@@ -132,43 +123,6 @@ def build_native_bloom_state(
         {"capacity": capacity, "false_positive_rate": false_positive_rate},
     )
     return build_global_state(df, spec, tree_fanin)
-
-
-# driver-side cache: the one-row words relation per filter state, so
-# repeated probes against the same filter reuse one cached (and hence
-# one-time-serialized) local relation instead of re-pickling ~MBs of
-# words through createDataFrame per probe. Keyed by
-# (applicationId, full-blob digest): a cached DataFrame is bound to the
-# SparkSession that built it, so after a session restart the same state
-# must build a fresh relation (ADVICE r3 #2 — stale entries from dead
-# sessions are evicted on the way through). Bounded like the
-# executor-side _FILTER_CACHE.
-_WORDS_DF_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _native_words_df(spark, state: bytes, words) -> DataFrame:
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, state_key(state))
-    df = _WORDS_DF_CACHE.get(key)
-    if df is None:
-        # drop relations bound to other (stopped) sessions first
-        for old_key in [k for k in _WORDS_DF_CACHE if k[0] != app_id]:
-            try:
-                _WORDS_DF_CACHE.pop(old_key).unpersist()
-            except Exception:
-                pass  # the owning session is gone; nothing to release
-        # one-row relation (NOT F.lit(list): that builds a CreateArray
-        # with one analyzer child PER ELEMENT — catastrophic at 10^5+
-        # words; and NOT from_json(lit): JsonToStructs is not constant-
-        # folded, so it would re-parse per batch — measured 10x slower)
-        df = spark.createDataFrame([(words.tolist(),)], "__nbf_words array<bigint>")
-        df = df.cache()
-        _WORDS_DF_CACHE[key] = df
-        # oldest-only eviction (VERDICT r4 #3): still-hot relations survive
-        from probabilistic_rs_spark.common import lru_evict
-
-        lru_evict(_WORDS_DF_CACHE, 8, lambda d: d.unpersist())
-    return df
 
 
 def _native_member_expr(item_col: str, warr, m: int, k: int):
@@ -213,17 +167,18 @@ def native_bloom_probe(
     base hashes get re-evaluated once per bit test per row. The barrier
     keeps the predicate in a ProjectExec (one evaluation, hashes CSE'd)
     and the filter reads the materialized column."""
-    from probabilistic_rs_spark.operators.sketch_agg import pushdown_barrier
     from probabilistic_rs_spark.sketches.native_bloom import NativeBloomSketch
 
     sk = NativeBloomSketch.from_bytes(state)
-    bf_df = _native_words_df(probe_df.sparkSession, state, sk.words())
-    joined = probe_df.crossJoin(F.broadcast(bf_df))
-    member = pushdown_barrier(
-        _native_member_expr(item_col, F.col("__nbf_words"), sk.m, sk.k),
+    return broadcast_state_probe(
+        probe_df,
+        ("nbloom", state_key(state)),
+        "__nbf_words array<bigint>",
+        lambda: sk.words().tolist(),
+        lambda words: _native_member_expr(item_col, words, sk.m, sk.k),
+        out_col,
         boolean=True,
     )
-    return joined.withColumn(out_col, member).drop("__nbf_words")
 
 
 def native_bloom_semi_filter(
@@ -237,18 +192,4 @@ def native_bloom_semi_filter(
     tests each re-derived both KM base hashes per row; the barriered
     projection computes the two hashes once and the filter reads the
     materialized bit."""
-    from probabilistic_rs_spark.operators.sketch_agg import pushdown_barrier
-    from probabilistic_rs_spark.sketches.native_bloom import NativeBloomSketch
-
-    sk = NativeBloomSketch.from_bytes(state)
-    bf_df = _native_words_df(probe_df.sparkSession, state, sk.words())
-    member = pushdown_barrier(
-        _native_member_expr(item_col, F.col("__nbf_words"), sk.m, sk.k),
-        boolean=True,
-    )
-    return (
-        probe_df.crossJoin(F.broadcast(bf_df))
-        .withColumn("__nbf_member", member)
-        .where(F.col("__nbf_member"))
-        .drop("__nbf_words", "__nbf_member")
-    )
+    return semi_filter(native_bloom_probe, probe_df, item_col, state)

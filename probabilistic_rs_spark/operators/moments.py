@@ -27,14 +27,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType
 
+from probabilistic_rs_spark.common import broadcast_state, state_key
 from probabilistic_rs_spark.errors import SketchConfigError
+from probabilistic_rs_spark.operators.sketch_agg import (
+    broadcast_state_probe,
+    native_bloom_base_hash_exprs,
+)
 from probabilistic_rs_spark.sketches.countsketch import CountSketch
-
-# driver-side broadcast reuse + executor-side deserialized-state cache —
-# same pattern as heavy_hitters._PROBE_BROADCASTS/_CMS_CACHE
-_PROBE_BROADCASTS: dict[tuple, object] = {}
-_CS_CACHE: dict[str, CountSketch] = {}
-_CS_TABLE_DF_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def build_cs_state(
@@ -192,22 +191,6 @@ def cs_apply_ops_df(
     return gen.to_bytes()
 
 
-def _cs_broadcast(sc, state: bytes):
-    import hashlib
-
-    key = hashlib.sha1(state).hexdigest()
-    memo_key = (sc.applicationId, key)
-    bc = _PROBE_BROADCASTS.get(memo_key)
-    if bc is None:
-        from probabilistic_rs_spark.common import lru_evict
-
-        bc = sc.broadcast(state)
-        _PROBE_BROADCASTS[memo_key] = (key, bc)
-        lru_evict(_PROBE_BROADCASTS, 16)
-        return key, bc
-    return bc
-
-
 def cs_probe(
     probe_df: DataFrame,
     key_col: str,
@@ -222,20 +205,16 @@ def cs_probe(
     and build agree byte-for-byte."""
     from pyspark.sql.functions import pandas_udf
 
-    from probabilistic_rs_spark.operators.sketch_agg import native_bloom_base_hash_exprs
-
-    sc = probe_df.sparkSession.sparkContext
-    key, bc = _cs_broadcast(sc, state)
+    load = broadcast_state(
+        probe_df.sparkSession.sparkContext,
+        ("cs", state_key(state)),
+        state,
+        CountSketch,
+    )
 
     @pandas_udf(LongType())
     def est(h1s: pd.Series, h2s: pd.Series) -> pd.Series:
-        from probabilistic_rs_spark.common import lru_evict
-
-        cs = _CS_CACHE.get(key)
-        if cs is None:
-            cs = CountSketch.from_bytes(bc.value)
-            _CS_CACHE[key] = cs
-            lru_evict(_CS_CACHE, 8)
+        cs = load()
         base = np.stack(
             [h1s.to_numpy(dtype="int64"), h2s.to_numpy(dtype="int64")], axis=1
         )
@@ -243,27 +222,6 @@ def cs_probe(
 
     h1, h2 = native_bloom_base_hash_exprs(F.col(key_col))
     return probe_df.withColumn(out_col, est(h1, h2))
-
-
-def _cs_table_df(spark, state: bytes, cs: CountSketch) -> DataFrame:
-    from probabilistic_rs_spark.common import lru_evict, state_key
-
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, state_key(state))
-    df = _CS_TABLE_DF_CACHE.get(key)
-    if df is None:
-        for old_key in [k for k in _CS_TABLE_DF_CACHE if k[0] != app_id]:
-            try:
-                _CS_TABLE_DF_CACHE.pop(old_key).unpersist()
-            except Exception:
-                pass
-        # flat d·w layout: one element_at per read (index j·w + bucket)
-        df = spark.createDataFrame(
-            [(cs.table.ravel().tolist(),)], "__cs_flat array<bigint>"
-        ).cache()
-        _CS_TABLE_DF_CACHE[key] = df
-        lru_evict(_CS_TABLE_DF_CACHE, 8, lambda d: d.unpersist())
-    return df
 
 
 def _batcher_pairs(n: int) -> list[tuple[int, int]]:
@@ -350,38 +308,36 @@ def native_cs_probe(
     4.1 s → 0.58 s over 10⁶ probes with the barrier; the barrier keeps
     the estimate in a ProjectExec, where codegen CSE collapses the
     network to its 2 hashes + d reads + comparator count)."""
-    from probabilistic_rs_spark.operators.sketch_agg import (
-        native_bloom_base_hash_exprs,
-        pushdown_barrier,
-    )
-
     cs = CountSketch.from_bytes(state)
-    tdf = _cs_table_df(probe_df.sparkSession, state, cs)
     h1, h2 = native_bloom_base_hash_exprs(F.col(key_col))
     mask = F.lit(int(cs.w - 1))
-    reads = []
-    for j in range(cs.d):
-        bucket = (h1 + F.lit(int(j)) * h2).bitwiseAND(mask)
-        sign_bit = (
-            F.call_function(
-                "shiftrightunsigned",
-                h2 + F.lit(int(j)) * F.call_function("shiftrightunsigned", h1, F.lit(7)),
-                F.lit(20),
+
+    def estimate(flat):
+        reads = []
+        for j in range(cs.d):
+            bucket = (h1 + F.lit(int(j)) * h2).bitwiseAND(mask)
+            sign_bit = (
+                F.call_function(
+                    "shiftrightunsigned",
+                    h2 + F.lit(int(j)) * F.call_function("shiftrightunsigned", h1, F.lit(7)),
+                    F.lit(20),
+                )
+            ).bitwiseAND(F.lit(1))
+            sign = F.lit(1) - F.lit(2) * sign_bit
+            reads.append(
+                sign
+                * F.element_at(flat, (F.lit(int(j) * cs.w) + bucket).cast("int") + F.lit(1))
             )
-        ).bitwiseAND(F.lit(1))
-        sign = F.lit(1) - F.lit(2) * sign_bit
-        reads.append(
-            sign
-            * F.element_at(
-                F.col("__cs_flat"),
-                (F.lit(int(j) * cs.w) + bucket).cast("int") + F.lit(1),
-            )
-        )
-    est = pushdown_barrier(median_expr(reads))
-    return (
-        probe_df.crossJoin(F.broadcast(tdf))
-        .withColumn(out_col, est)
-        .drop("__cs_flat")
+        return median_expr(reads)
+
+    # flat d·w layout: one element_at per read (index j·w + bucket)
+    return broadcast_state_probe(
+        probe_df,
+        ("cs", state_key(state)),
+        "__cs_flat array<bigint>",
+        lambda: cs.table.ravel().tolist(),
+        estimate,
+        out_col,
     )
 
 
@@ -491,17 +447,3 @@ def f2_from_state(state: bytes) -> float:
     w.p. ≥ 1−δ. The skew statistic: F2/N is the hot-key-weighted mean
     frequency — compare against N/distinct before picking a join plan."""
     return CountSketch.from_bytes(state).f2_estimate()
-
-
-def self_join_size(
-    df: DataFrame,
-    key_col: str,
-    eps: float = 0.02,
-    delta: float = 0.001,
-    tree_fanin: int | str | None = "auto",
-) -> float:
-    """One-scan self-join-size estimate of ``df ⋈ df`` on ``key_col``:
-    build + F2 read. The exact answer is ``SELECT SUM(c*c) FROM (GROUP BY
-    key)`` — a full shuffle of every distinct key; this is a state-sized
-    shuffle instead."""
-    return f2_from_state(build_cs_state(df, key_col, eps=eps, delta=delta, tree_fanin=tree_fanin))

@@ -228,6 +228,53 @@ def pushdown_barrier(col: Column, boolean: bool = False) -> Column:
     return col + zero
 
 
+def broadcast_state_probe(
+    probe_df: DataFrame,
+    key: tuple,
+    column: str,
+    value,
+    expr,
+    out_col: str,
+    boolean: bool = False,
+) -> DataFrame:
+    """The one probe path of the native (JVM-expression) probes: the
+    reference's broadcast-once, probe-many ``contains_bulk`` as a plan.
+
+    The state rides a one-row relation, cached in ``common.RELATIONS``
+    under ``key`` (family tag, state digest, geometry), so repeated probes
+    of one state reuse one once-serialized local relation. ``column`` is
+    its DDL field and ``value()`` its content, computed on a cache miss
+    only. (Not ``F.lit(list)``: a literal array is a CreateArray with one
+    analyzer child per element.) The relation is broadcast into a
+    condition-free BroadcastNestedLoopJoin.
+    ``expr(state_col)`` builds the per-row probe expression over the
+    state column; it is computed in a Project behind
+    :func:`pushdown_barrier`, so a caller's filter on ``out_col`` reads
+    the materialized column instead of being inlined into the join
+    condition (which is evaluated without codegen's common-subexpression
+    elimination). The state column is dropped from the output."""
+    from probabilistic_rs_spark.common import RELATIONS
+
+    spark = probe_df.sparkSession
+    rel = RELATIONS.get(
+        (spark.sparkContext.applicationId, *key),
+        lambda: spark.createDataFrame([(value(),)], column).cache(),
+    )
+    name = column.split(" ", 1)[0]
+    out = pushdown_barrier(expr(F.col(name)), boolean=boolean)
+    return probe_df.crossJoin(F.broadcast(rel)).withColumn(out_col, out).drop(name)
+
+
+def semi_filter(probe, probe_df: DataFrame, *args, **kwargs) -> DataFrame:
+    """Approximate semi-join pre-filter over any membership probe: keep
+    the rows ``probe(probe_df, *args, out_col=…, **kwargs)`` marks as
+    (probably) present. The exact join downstream removes the ≤FPR false
+    positives."""
+    member = "__semi_member"
+    probed = probe(probe_df, *args, out_col=member, **kwargs)
+    return probed.where(F.col(member)).drop(member)
+
+
 def _value_expr(spec: SketchSpec) -> Column:
     """JVM-side value preparation — stays inside whole-stage codegen."""
     col = F.col(spec.column)
@@ -433,6 +480,10 @@ def sketch_partials(
 # list values per fold_groups output batch (32 MiB of int64 blocks): bounds
 # the Python memory of a batch of many large groups
 _FOLD_FLUSH_VALUES = 1 << 22
+# buffered payload bytes after which the block builds' partial stages
+# (CMS and windowed Bloom) emit what they hold: bounds their Python memory
+# per task instead of holding every row's offsets until the partition ends
+_PARTIAL_FLUSH_BYTES = 32 << 20
 
 
 def fold_groups(

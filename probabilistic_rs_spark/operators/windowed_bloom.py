@@ -20,6 +20,7 @@ timestamps, so late data is mis-filed into the current level —
 from __future__ import annotations
 
 import datetime as _dt
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -28,8 +29,13 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
+from probabilistic_rs_spark.common import broadcast_state, state_key
 from probabilistic_rs_spark.errors import SketchConfigError
-from probabilistic_rs_spark.operators.sketch_agg import SketchSpec, sketch_aggregate
+from probabilistic_rs_spark.operators.sketch_agg import (
+    SketchSpec,
+    broadcast_state_probe,
+    sketch_aggregate,
+)
 from probabilistic_rs_spark.sketches.bloom import BloomSketch
 
 
@@ -222,11 +228,8 @@ def prune_states_table(spark, path: str, num_levels: int = 3, as_of=None) -> int
     return n
 
 
-# executor-side cache of deserialized level lists, keyed by a driver-side
-# content digest — one deserialize per worker lifetime, not one per Arrow
-# batch (the same cache idiom as membership._FILTER_CACHE /
-# heavy_hitters._CMS_CACHE / cuckoo._SHARDS_CACHE; VERDICT r2 item 4)
-_LEVELS_CACHE: dict[str, list[BloomSketch]] = {}
+def _decode_levels(blobs: list[bytes]) -> list[BloomSketch]:
+    return [BloomSketch.from_bytes(b) for b in blobs]
 
 
 def probe_recent(
@@ -239,18 +242,15 @@ def probe_recent(
     """Membership over the active level set: per-level AND, cross-level OR
     — exactly the reference's ``contains`` (``src/ebloom/filter.rs:602-638``),
     vectorized over a whole Arrow batch and all levels."""
-    import hashlib
-
-    sc = probe_df.sparkSession.sparkContext
     blobs = [blob for _, _, blob in level_states]
     if max_broadcast_bytes is not None:
         _check_level_budget(sum(len(b) for b in blobs), 1, max_broadcast_bytes)
-    bc = sc.broadcast(blobs)
-    h = hashlib.sha1()
-    for b in blobs:
-        h.update(len(b).to_bytes(8, "little"))
-        h.update(b)  # full-blob digest: rotated levels can share head/tail
-    key = h.hexdigest()
+    load = broadcast_state(
+        probe_df.sparkSession.sparkContext,
+        ("levels", state_key(blobs)),
+        blobs,
+        _decode_levels,
+    )
 
     @pandas_udf(BooleanType())
     def probe(items: pd.Series) -> pd.Series:
@@ -258,13 +258,7 @@ def probe_recent(
 
         from probabilistic_rs_spark.functions.hashing import pad_batch_arrow
 
-        from probabilistic_rs_spark.common import lru_evict
-
-        levels = _LEVELS_CACHE.get(key)
-        if levels is None:
-            levels = [BloomSketch.from_bytes(b) for b in bc.value]
-            _LEVELS_CACHE[key] = levels
-            lru_evict(_LEVELS_CACHE, 8)
+        levels = load()
         buf, lens = pad_batch_arrow(
             pa.Array.from_pandas(items, type=pa.string()), scratch_key="wb_probe"
         )
@@ -274,12 +268,6 @@ def probe_recent(
         return pd.Series(res)
 
     return probe_df.withColumn(out_col, probe(F.col(item_col).cast("string")))
-
-
-# driver-side cache of the stacked level-words relation, keyed by
-# (applicationId, combined full-blob digest) — membership._WORDS_DF_CACHE
-# idiom
-_LEVEL_WORDS_DF_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def native_probe_recent(
@@ -297,9 +285,6 @@ def native_probe_recent(
     (``src/ebloom/filter.rs:602-638``) entirely inside whole-stage
     codegen. All levels must share one (m, k) config (they do by
     construction — one spec builds every window)."""
-    import hashlib
-
-    from probabilistic_rs_spark.common import state_key
     from probabilistic_rs_spark.operators.membership import _native_member_expr
     from probabilistic_rs_spark.sketches.native_bloom import NativeBloomSketch
 
@@ -317,44 +302,22 @@ def native_probe_recent(
             f"native_probe_recent needs one shared (m, k) across levels, got {mk}"
         )
     m, k = mk.pop()
-    spark = probe_df.sparkSession
-    app_id = spark.sparkContext.applicationId
-    h = hashlib.sha1()
-    for _, _, blob in level_states:
-        h.update(len(blob).to_bytes(8, "little"))
-        h.update(blob)
-    key = (app_id, h.hexdigest())
-    ldf = _LEVEL_WORDS_DF_CACHE.get(key)
-    if ldf is None:
-        for old_key in [kk for kk in _LEVEL_WORDS_DF_CACHE if kk[0] != app_id]:
-            try:
-                _LEVEL_WORDS_DF_CACHE.pop(old_key).unpersist()
-            except Exception:
-                pass
-        ldf = spark.createDataFrame(
-            [([sk.words().tolist() for sk in sketches],)],
-            "__wbl_words array<array<bigint>>",
-        ).cache()
-        _LEVEL_WORDS_DF_CACHE[key] = ldf
-        from probabilistic_rs_spark.common import lru_evict
 
-        lru_evict(_LEVEL_WORDS_DF_CACHE, 8, lambda d: d.unpersist())
-    member = None
-    for lv in range(len(sketches)):
-        warr = F.element_at(F.col("__wbl_words"), F.lit(lv + 1))
-        term = _native_member_expr(item_col, warr, m, k)
-        member = term if member is None else (member | term)
-    from probabilistic_rs_spark.operators.sketch_agg import pushdown_barrier
+    def member(words):
+        terms = [
+            _native_member_expr(item_col, F.element_at(words, F.lit(lv + 1)), m, k)
+            for lv in range(len(sketches))
+        ]
+        return reduce(lambda a, b: a | b, terms)
 
-    # pushdown_barrier (round 8): a downstream .where(is_member) would
-    # otherwise inline all levels·k bit tests into the join condition,
-    # which is evaluated without codegen subexpression elimination — the
-    # KM base hashes re-derived per bit test per row
-    member = pushdown_barrier(member, boolean=True)
-    return (
-        probe_df.crossJoin(F.broadcast(ldf))
-        .withColumn(out_col, member)
-        .drop("__wbl_words")
+    return broadcast_state_probe(
+        probe_df,
+        ("nlevels", state_key([blob for _, _, blob in level_states])),
+        "__wbl_words array<array<bigint>>",
+        lambda: [sk.words().tolist() for sk in sketches],
+        member,
+        out_col,
+        boolean=True,
     )
 
 
@@ -524,9 +487,11 @@ def build_windowed_bloom_blocks_df(
     Bit-identical output (same positions, same word layout, OR is
     order-free) — asserted in tests.
 
-    Per-task memory stays bounded: the partial stage holds one
-    partition's offset lists (O(rows·k) int32), the merge stage one
-    Arrow batch of blocks' offset arrays and a bounded output; prefer the
+    Per-task memory stays bounded: the partial stage emits its buffered
+    offsets whenever they pass ``sketch_agg._PARTIAL_FLUSH_BYTES`` (a
+    block may then get several partial rows from one task; the fold ORs
+    them all), the merge stage holds one Arrow batch of blocks' offset
+    arrays and a bounded output; prefer the
     state-aggregate build (:func:`windowed_bloom_states` →
     :func:`windowed_states_to_blocks_df`, which shuffles only per-
     partition partial states) whenever a level fits one task.
@@ -541,6 +506,7 @@ def build_windowed_bloom_blocks_df(
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
 
+    from probabilistic_rs_spark.operators import sketch_agg
     from probabilistic_rs_spark.operators.sketch_agg import (
         batch_groups,
         fold_groups,
@@ -573,9 +539,34 @@ def build_windowed_bloom_blocks_df(
     bits_per_block = wpb * 64
     m_u, k_, wpb_ = np.uint64(m), int(k), int(wpb)
 
+    budget = sketch_agg._PARTIAL_FLUSH_BYTES
+
     def partials(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         # level key -> (the level as a one-row array, dict[block -> list[int32 offs]])
         acc: dict = {}
+
+        def flush() -> "pa.RecordBatch":
+            levels, blks, payloads = [], [], []
+            for level, lvl_acc in acc.values():
+                for b, chunks in lvl_acc.items():
+                    levels.append(level)
+                    blks.append(b)
+                    payloads.append(
+                        chunks[0].tobytes()
+                        if len(chunks) == 1
+                        else np.concatenate(chunks).tobytes()
+                    )
+            acc.clear()
+            return pa.RecordBatch.from_arrays(
+                [
+                    pa.concat_arrays(levels).cast(arrow_mid.field(0).type),
+                    pa.array(blks, type=pa.int32()),
+                    pa.array(payloads, type=pa.binary()),
+                ],
+                schema=arrow_mid,
+            )
+
+        held = 0
         for batch in batches:
             n = batch.num_rows
             if n == 0:
@@ -596,26 +587,12 @@ def build_windowed_bloom_blocks_df(
                     acc[lvl] = (batch.column(0).take([rows[0]]), {})
                 for b, sel in key_runs(blocks):
                     acc[lvl][1].setdefault(int(b), []).append(offs[sel])
-        if not acc:
-            return
-        levels, blks, payloads = [], [], []
-        for level, lvl_acc in acc.values():
-            for b, chunks in lvl_acc.items():
-                levels.append(level)
-                blks.append(b)
-                payloads.append(
-                    chunks[0].tobytes()
-                    if len(chunks) == 1
-                    else np.concatenate(chunks).tobytes()
-                )
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.concat_arrays(levels).cast(arrow_mid.field(0).type),
-                pa.array(blks, type=pa.int32()),
-                pa.array(payloads, type=pa.binary()),
-            ],
-            schema=arrow_mid,
-        )
+                held += offs.nbytes
+            if held >= budget:
+                yield flush()
+                held = 0
+        if acc:
+            yield flush()
 
     mid = proj.mapInArrow(partials, mid_schema)
 

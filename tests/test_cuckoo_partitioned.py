@@ -316,18 +316,26 @@ class TestLruEviction:
         # 17 interleaved probe families: only the single oldest broadcast
         # is evicted; the 16 hot ones keep their memo entries (VERDICT r4
         # #3 'done' criterion)
-        from probabilistic_rs_spark.operators import cuckoo as ck
+        from probabilistic_rs_spark.common import (
+            BROADCASTS,
+            session_broadcast,
+            state_key,
+        )
 
-        ck._SHARD_BROADCASTS.clear()
+        BROADCASTS.clear()
         sc = spark.sparkContext
         families = [[bytes([i]) * 64] for i in range(17)]
-        entries = [ck._shards_broadcast(sc, fam) for fam in families]
-        assert len(ck._SHARD_BROADCASTS) == 16
+
+        def memo(fam):
+            return session_broadcast(sc, ("cuckoo", state_key(fam)), fam)
+
+        entries = [memo(fam) for fam in families]
+        assert len(BROADCASTS) == 16
         # oldest (family 0) evicted; families 1..16 still memoized
         for fam, entry in zip(families[1:], entries[1:]):
-            assert ck._shards_broadcast(sc, fam) is entry
-        assert ck._shards_broadcast(sc, families[0]) is not entries[0]
-        ck._SHARD_BROADCASTS.clear()
+            assert memo(fam) is entry
+        assert memo(families[0]) is not entries[0]
+        BROADCASTS.clear()
 
 
 class TestWindowedBloomBudget:

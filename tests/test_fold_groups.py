@@ -195,3 +195,40 @@ class TestBatchSizeInvariance:
             small = blocks()
         assert small == default
         assert len(default) > 4
+
+    @pytest.mark.parametrize("build", [_cms_blocks, _windowed_blocks], ids=["cms", "windowed"])
+    def test_partial_flush_budget_gives_the_same_blocks(self, spark, events, build, monkeypatch):
+        """With a byte budget of a few KiB the partial stages emit their
+        buffered offsets many times per task, so some block gets more
+        partial rows than in the default run, and the folded blocks stay
+        bit-identical."""
+        from probabilistic_rs_spark.operators import heavy_hitters, sketch_agg
+
+        mids = []
+        fold = sketch_agg.fold_groups
+
+        def recording(df, keys, *args):
+            mids.append((df, keys))
+            return fold(df, keys, *args)
+
+        monkeypatch.setattr(heavy_hitters, "fold_groups", recording)
+        monkeypatch.setattr(sketch_agg, "fold_groups", recording)
+
+        def run():
+            mids.clear()
+            out = build(events)
+            mid, keys = mids[-1]
+            partials = Counter(tuple(r) for r in mid.select(*keys).collect())
+            val = "cells" if "cells" in out.columns else "words"
+            blocks = sorted(
+                (tuple(r[c] for c in keys), tuple(r[val])) for r in out.collect()
+            )
+            return partials, blocks
+
+        with _conf(spark, BATCH_CONF, "64"):
+            default_partials, default_blocks = run()
+            monkeypatch.setattr(sketch_agg, "_PARTIAL_FLUSH_BYTES", 4096)
+            small_partials, small_blocks = run()
+        assert small_blocks == default_blocks
+        assert sum(small_partials.values()) > sum(default_partials.values())
+        assert any(small_partials[k] > n for k, n in default_partials.items())
